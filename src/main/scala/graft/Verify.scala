@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -45,16 +44,7 @@ object Verify {
     // The driver always passes exactly two args → full dump, contract intact.
     val only = args.lift(2)
     def keep(name: String): Boolean = only.forall(name.contains)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.excludedRules", graft.core.GraftSession.OptimizerExclusions)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.build()
     new java.io.File(outDir).mkdirs()
     // Stale-bytecode tripwire: the tree hash below vouches for SOURCES,
     // but this JVM executes CLASSES — an edit-without-recompile run would

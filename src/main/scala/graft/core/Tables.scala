@@ -45,8 +45,9 @@ object Tables {
   def embeddings(s: SparkSession, d: String): DataFrame = t(s, d, "embeddings")
 }
 
-/** Test/session helper. Bench and Verify own their sessions (driver
-  * contract); this one is for ScalaTest specs.
+/** The one way graft builds a session: the config `graft.Bench` times,
+  * shared by every main, tool and spec so the oracle gate and the tests
+  * vouch for the plans the benchmarks run.
   */
 object GraftSession {
 
@@ -64,20 +65,24 @@ object GraftSession {
     * kernel (the dedup family's root stage) 0.8 s without. The rule is a
     * pure pruning optimization — explode(outer=false) drops empty/null
     * arrays identically — so excluding it changes no query's rows, only
-    * removes the duplicated evaluation. Set on every session that runs
-    * graft operators (Bench, Verify, tools, specs).
+    * removes the duplicated evaluation. Set by [[build]], so on every
+    * graft session.
     */
   val OptimizerExclusions: String =
     "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
 
-  def local(cores: Int = 4): SparkSession = {
+  /** `local[cpus]` with one shuffle partition per cpu, UTC, the 64 MB
+    * broadcast threshold, [[OptimizerExclusions]], no UI, graft's
+    * extensions, log level WARN. `cpus` defaults to `SPARK_GRAFT_CPUS`
+    * (else 4).
+    */
+  def build(cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt): SparkSession = {
     val s = SparkSession
       .builder()
-      .master(s"local[$cores]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
       .config("spark.sql.optimizer.excludedRules", OptimizerExclusions)
       .config("spark.ui.enabled", "false")
       .withExtensions(new graft.GraftExtensions)

@@ -4508,11 +4508,10 @@ object CurationOps {
         ((ct + 1).toDouble * (tr + DsirBuckets).toDouble) /
           ((cr + 1).toDouble * (tt + DsirBuckets).toDouble))
     }.toMap
-    val stopList = TextOps.Stopwords.map(s => s"'$s'").mkString(", ")
     val scored = corpus.select(
       col("doc_id"),
       col("source"),
-      (expr(s"size(filter(toks, t -> t IN ($stopList)))") / size(col("toks"))).as("sr"),
+      (TextOps.stopCountOf("toks") / size(col("toks"))).as("sr"),
       graft.functions.Expressions
         .lm_xent(col("toks"), lmM._1, lmM._2, LmBuckets)
         .getField("lm_xent").as("lm_xent"),

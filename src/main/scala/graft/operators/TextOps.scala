@@ -127,11 +127,14 @@ object TextOps {
     */
   private[graft] val Stopwords = Seq("the", "a", "an", "and", "of", "to", "in", "is")
 
-  /** stop-word count over whitespace tokens of `text` (shared helper). */
-  private[graft] def stopCountExpr: Column = {
+  /** stop-word count over the string-array SQL expression `toksSql`. */
+  private[graft] def stopCountOf(toksSql: String): Column = {
     val lst = Stopwords.map(s => s"'$s'").mkString(", ")
-    expr(s"size(filter(split(trim(text), '\\\\s+'), t -> t IN ($lst)))")
+    expr(s"size(filter($toksSql, t -> t IN ($lst)))")
   }
+
+  /** stop-word count over whitespace tokens of `text` (shared helper). */
+  private[graft] def stopCountExpr: Column = stopCountOf("split(trim(text), '\\\\s+')")
 
   def qualityScore(spark: SparkSession, dir: String): DataFrame =
     qualityScored(spark, dir).orderBy(col("doc_id"))

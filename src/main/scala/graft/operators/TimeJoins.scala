@@ -863,17 +863,15 @@ object TimeJoins {
     * from the data, no float interpolation to disagree on); the 12
     * thresholds pivot to one broadcast row and every user scores map-side.
     * The monetary histogram's cardinality is data-dependent (~|users|
-    * distinct DECIMAL sums), so the cut ranks are located by TWO-LEVEL
-    * BIN REFINEMENT (the q43 r14.2 shape plus one recursion, r15): a
-    * ≤4096-bin equi-width count histogram per metric finds each cut's
-    * covering bin; the covering bins are re-binned once with BIN-LOCAL
-    * ranges; and only covering SUB-bin values get exact ranks — no
-    * corpus-grain range shuffle, no checkpoint. The per-metric bin and
-    * sub-bin windows are hard-bounded at 4096 rows; the final exact-rank
-    * window holds the distinct values inside 1/4096 of the covering
-    * bin's own span (4096² effective resolution — see the refinement
-    * comment below for the honest bound). Tile rule: score = 1 + #cuts
-    * passed (strictly
+    * distinct DECIMAL sums), so the cut ranks are located by BIN
+    * REFINEMENT (the q43 r14.2 shape): a ≤4096-bin equi-width count
+    * histogram per metric finds each cut's covering bin, and only
+    * boundary-bin values get exact ranks — no corpus-grain range shuffle,
+    * no checkpoint. The per-metric single-task window runs over the
+    * ≤4096-row bin table; the exact-rank window holds one covering bin's
+    * distinct values, which stays small while values spread across bins
+    * (an outlier that funnels most users into one bin is not guarded
+    * against). Tile rule: score = 1 + #cuts passed (strictly
     * below for recency where smaller is better, strictly above for
     * frequency/monetary), so ties share the lower tile deterministically.
     */
@@ -935,54 +933,13 @@ object TimeJoins {
     val bBins = binCum
       .filter(coversAny)
       .select(col("g"), col("bin"), (col("cumb") - col("bc")).as("cum0"), col("n"))
-    // r15 skew hardening (ADVICE): ONE refinement recursion before the
-    // exact-rank window. A covering bin's distinct-value count is
-    // data-dependent — an outlier stretching the metric's global range
-    // funnels nearly all real values into one equi-width bin, and the
-    // r14 spelling then sorted that near-user-grain slice in a single
-    // window task. The covering bins are re-binned with BIN-LOCAL
-    // (mn₂, mx₂) ranges (so an outlier that stretched the GLOBAL range
-    // cannot also stretch the local one), the ≤4096-row sub-bin table
-    // locates each cut's covering SUB-bin, and only sub-bin rows get the
-    // exact-rank window — per-task state is the distinct values within
-    // 1/4096 of the covering bin's own value span (4096² effective
-    // global resolution; not a hard bound, but defeating it needs values
-    // nested inside 6e-8 of their own bin's span). Rank arithmetic is
-    // unchanged: cum is the same global cumulative count, offset through
-    // two bin prefixes instead of one.
-    val bRows = binned
+    // exact ranks for boundary-bin values only: within-bin running count
+    // offset by the bin's cum-before; the covering value of every cut is
+    // in a boundary bin, so min(v | cum ≥ ⌈p·n⌉) is unchanged
+    val ranked = binned
       .join(broadcast(bBins), Seq("g", "bin"))
-    val stats2 = bRows
-      .groupBy(col("g"), col("bin"))
-      .agg(min(col("v")).as("mn2"), max(col("v")).as("mx2"))
-    val bin2Of =
-      when(col("mx2") === col("mn2"), lit(0L))
-        .otherwise(least(
-          lit(RfmBins - 1L),
-          floor((col("v") - col("mn2")) / ((col("mx2") - col("mn2")) / lit(RfmBins.toDouble)))
-            .cast("long")))
-    val sub = bRows
-      .join(broadcast(stats2), Seq("g", "bin"))
-      .withColumn("bin2", bin2Of)
-    val byGBin = Window.partitionBy(col("g"), col("bin"))
-    val subCum = sub
-      .groupBy(col("g"), col("bin"), col("cum0"), col("n"), col("bin2"))
-      .agg(sum(col("c")).as("bc2"))
-      .withColumn("cumb2",
-        col("cum0") + sum(col("bc2")).over(byGBin.orderBy(col("bin2"))))
-    val coversAny2 = RfmCuts
-      .map(p => (col("cumb2") - col("bc2") < ceil(lit(p) * col("n").cast("double"))) &&
-        (ceil(lit(p) * col("n").cast("double")) <= col("cumb2")))
-      .reduce(_ || _)
-    val bBins2 = subCum
-      .filter(coversAny2)
-      .select(col("g"), col("bin"), col("bin2"), (col("cumb2") - col("bc2")).as("cum20"), col("n"))
-    val ranked = sub
-      .select(col("g"), col("bin"), col("bin2"), col("v"), col("c"))
-      .join(broadcast(bBins2), Seq("g", "bin", "bin2"))
       .withColumn("cum",
-        col("cum20") + sum(col("c"))
-          .over(Window.partitionBy(col("g"), col("bin"), col("bin2")).orderBy(col("v"))))
+        col("cum0") + sum(col("c")).over(Window.partitionBy(col("g"), col("bin")).orderBy(col("v"))))
     val cuts = ranked
       .withColumn("p", explode(expr(RfmCuts.map(p => s"${p}D").mkString("array(", ", ", ")"))))
       .filter(col("cum") >= ceil(col("p") * col("n").cast("double")))

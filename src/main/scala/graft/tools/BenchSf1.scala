@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
 
 /** Full-suite sf1 scale rehearsal: every registered query timed at sf0.1
@@ -111,18 +109,7 @@ object BenchSf1 {
   def main(args: Array[String]): Unit = {
     val sf01Dir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val outPath = args.lift(1).getOrElse("/root/repo/BENCH_SF1_FULL.json")
-    val cpus    = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
-      .config("spark.sql.optimizer.excludedRules", graft.core.GraftSession.OptimizerExclusions)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.build()
 
     val sf1Dir = ScaleData.ensure(spark, sf01Dir, "/tmp/graft_sf1")
 

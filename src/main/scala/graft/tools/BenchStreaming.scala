@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -10,7 +10,9 @@ import org.apache.spark.sql.streaming.Trigger
   * operator over the REAL corpus through the `readStream` file source
   * (one AvailableNow pass, noop sink — the batch bench's methodology
   * transposed to micro-batches) and writes per-op seconds to
-  * `BENCH_STREAMING.json`.
+  * `BENCH_STREAMING.json` in the working directory. An operator that
+  * throws is listed under `"failed"`, left out of `streaming_total`, and
+  * makes the run exit non-zero.
   *
   * Coverage: the event-side stateful family (windowed agg, dedup,
   * sessionization, OHLC, top-k, transitions, EWMA, gap fill) and the
@@ -27,17 +29,7 @@ import org.apache.spark.sql.streaming.Trigger
 object BenchStreaming {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.excludedRules", graft.core.GraftSession.OptimizerExclusions)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.build()
     import spark.implicits._
 
     // file source wants a directory; stage each table's single parquet file
@@ -110,27 +102,29 @@ object BenchStreaming {
             .trigger(Trigger.AvailableNow())
             .start()
           q.awaitTermination()
-          (System.nanoTime() - t0) / 1e9
+          val s = (System.nanoTime() - t0) / 1e9
+          System.err.println(f"[bench-streaming] $name: $s%.2f s")
+          Some(s)
         } catch {
           case e: Throwable =>
             System.err.println(s"[bench-streaming] $name failed: ${e.getMessage}")
-            -1.0
+            None
         } finally graft.core.CacheScope.drain(spark)
-      System.err.println(f"[bench-streaming] $name: $t%.2f s")
       name -> t
     }
-    val total = results.map(_._2).filter(_ >= 0).sum
-    val json = results
-      .map { case (k, v) => f""""$k": $v%.2f""" }
-      .mkString(
-        f"""{"metric":"streaming_total","value":$total%.2f,"unit":"sec","sf":"${new java.io.File(
+    val timed  = results.collect { case (k, Some(v)) => k -> v }
+    val failed = results.collect { case (k, None) => k }
+    val json =
+      timed.map { case (k, v) => f""""$k": $v%.2f""" }.mkString(
+        f"""{"metric":"streaming_total","value":${timed.map(_._2).sum}%.2f,"unit":"sec","sf":"${new java.io.File(
             sfDir).getName}","ops":{""",
         ", ",
-        "}}")
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("/root/repo/BENCH_STREAMING.json"), json + "\n")
-    catch { case e: Throwable => System.err.println(s"[bench-streaming] write failed: $e") }
+        "}") +
+        failed.map("\"" + _ + "\"").mkString(""","failed":[""", ", ", "]}")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_STREAMING.json"), json + "\n")
     println(json)
     spark.stop()
+    // a failed operator is a failed run, not a fast one
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -1,13 +1,11 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 object CodegenCheck {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.codegen.fallback", "false")
-      .config("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.GraftExtensions.register(spark)
+    val spark = graft.core.GraftSession.build()
+    // runtime SQL confs: fail on any generated-code compile error instead
+    // of silently falling back to interpreted evaluation
+    spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
     val r = spark.sql(
       """SELECT graft_fingerprint(split(text, ' ')) AS fp,
         |  graft_simhash64(transform(split(text, ' '), t -> xxhash64(t))) AS sh

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.sinks.Sinks
 import graft.sources.HealthKitXml
 
@@ -19,15 +17,7 @@ object HealthKitDemo {
       sys.error("usage: HealthKitDemo <export.zip> [jdbcUrl]"))
     val jdbcUrl = args.lift(1).getOrElse("jdbc:derby:memory:hkdemo;create=true")
 
-    val spark = SparkSession
-      .builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("healthkit-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.build()
 
     val tables = HealthKitXml.tables(spark, Seq(zipPath))
     tables.toSeq.sortBy(_._1).foreach { case (name, df) =>

@@ -153,15 +153,7 @@ object HkToJdbc {
 
     if (!preflight(jdbcUrl, drop, yes, quiet)) return
 
-    val spark = SparkSession
-      .builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("hk-to-jdbc")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.build()
     try {
       val written = run(spark, zipPath, jdbcUrl, lenient, firstSeen, quiet)
       if (!quiet)

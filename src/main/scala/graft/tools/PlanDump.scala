@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
 
 /** Dumps `.explain("formatted")` for every SparkEntry query to PLANS.md —
@@ -21,16 +19,7 @@ object PlanDump {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out   = args.lift(1).getOrElse("/root/repo/PLANS.md")
     val only  = args.lift(2).getOrElse("")
-    val spark = SparkSession
-      .builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.excludedRules", graft.core.GraftSession.OptimizerExclusions)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.GraftSession.build()
 
     val sb = new StringBuilder
     sb.append("# PLANS — physical plans per query (explain formatted)\n\n")

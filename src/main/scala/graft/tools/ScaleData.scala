@@ -162,7 +162,7 @@ object ScaleData {
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("/tmp/graft_sf1")
-    val spark = graft.core.GraftSession.local(8)
+    val spark = graft.core.GraftSession.build()
     val t0 = System.nanoTime()
     ensure(spark, src, out)
     println(f"[scale-data] $out ready in ${(System.nanoTime() - t0) / 1e9}%.1f s")

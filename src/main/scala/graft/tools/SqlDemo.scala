@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** SQL-surface walkthrough: a session built with graft's extensions, driving
   * the registered functions from plain SQL.
   *
@@ -9,16 +7,8 @@ import org.apache.spark.sql.SparkSession
   */
 object SqlDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession
-      .builder()
-      .master("local[2]")
-      .appName("graft-sql-demo")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1") // show the bucketed SMJ path
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.GraftSession.build()
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // show the bucketed SMJ path
 
     spark
       .sql("""SELECT v, hk_infer_type(v) AS ty FROM VALUES

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 
 /** Plan-quality regression guards: the physical-plan properties SURVEY §5
   * claims, asserted so future rounds can't silently regress them.
@@ -26,6 +27,23 @@ class PlanGuardSpec extends SparkSpec {
 
   private lazy val plans: Map[String, String] =
     execPlans.map { case (name, p) => name -> p.toString }
+
+  test("the spec session is the benchmarked session: graft.Bench's config, extensions injected") {
+    val s = SharedSpark.spark
+    assert(s.conf.get("spark.sql.shuffle.partitions") ==
+      s.sparkContext.master.stripPrefix("local[").stripSuffix("]"))
+    assert(s.sessionState.conf.autoBroadcastJoinThreshold == 64L * 1024 * 1024)
+    assert(s.conf.get("spark.sql.optimizer.excludedRules") ==
+      graft.core.GraftSession.OptimizerExclusions)
+    assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(s.sessionState.functionRegistry.functionExists(FunctionIdentifier("hk_infer_type")))
+    // injected at build time, into the operator-optimization batches — not
+    // only the late user batch `GraftExtensions.register` appends to
+    val ruleBatches = s.sessionState.optimizer.batches
+      .filter(_.rules.contains(graft.plans.BoundedRankRewrite)).map(_.name)
+    assert(ruleBatches.exists(_ != "User Provided Optimizers"),
+      s"BoundedRankRewrite not injected: $ruleBatches")
+  }
 
   test("every query's plan builds and stays within its shuffle budget") {
     val budgets = Map(

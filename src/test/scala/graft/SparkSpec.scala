@@ -7,7 +7,7 @@ import graft.core.GraftSession
 
 /** Shared local session for all suites (one forked JVM → one session). */
 object SharedSpark {
-  lazy val spark: SparkSession = GraftSession.local(4)
+  lazy val spark: SparkSession = GraftSession.build(4)
 }
 
 trait SparkSpec extends AnyFunSuite {
